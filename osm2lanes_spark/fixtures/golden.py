@@ -20,6 +20,8 @@ import os
 from typing import Optional
 
 TESTS_YML = "/root/reference/data/tests.yml"
+FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "golden_fixture")
 
 
 def _norm_speed(v) -> Optional[tuple]:
@@ -54,7 +56,14 @@ def load_cases(path: str = TESTS_YML,
     ``include_disabled=True`` also yields the 16 ``rust: false`` cases the
     reference's own runner skips, each flagged ``enabled=False`` — used to
     probe whether the engine exceeds reference coverage (COVERAGE.md §X).
+
+    When the default ``TESTS_YML`` is absent the enabled cases come from
+    the committed ``golden_fixture`` parquet pair
+    (:func:`load_fixture_cases`); the disabled cases are not committed, so
+    asking for them then raises. An explicit ``path`` is always read.
     """
+    if path == TESTS_YML and not os.path.exists(path) and not include_disabled:
+        return load_fixture_cases()
     import yaml
 
     with open(path) as f:
@@ -86,6 +95,47 @@ def load_cases(path: str = TESTS_YML,
             "expected_lanes": expected_lanes,
             "expect_warnings": expect_warnings,
             "include_separators": include_separators,
+        })
+    return cases
+
+
+def _speeds_to_tuples(lane: dict) -> dict:
+    """JSON turned the loader's ``(unit, value)`` speed tuples into lists."""
+    if isinstance(lane.get("max_speed"), list):
+        lane["max_speed"] = tuple(lane["max_speed"])
+    return lane
+
+
+def load_fixture_cases(fixture_dir: str = FIXTURE_DIR) -> list[dict]:
+    """The enabled cases rebuilt from ``documents.parquet`` (tags from the
+    ``kind='tag'`` spans in offset order, split on the first ``=``) joined
+    with ``golden.parquet`` (expected lanes from ``expected_json``).
+    ``way_id`` and ``description`` are not in the fixture and read None."""
+    import pyarrow.parquet as pq
+
+    golden = {g["case_id"]: g for g in pq.read_table(
+        os.path.join(fixture_dir, "golden.parquet")).to_pylist()}
+    docs = pq.read_table(os.path.join(fixture_dir, "documents.parquet"),
+                         columns=["case_id", "driving_side", "iso_3166_2",
+                                  "spans"]).to_pylist()
+    cases = []
+    for doc in docs:
+        g = golden[doc["case_id"]]
+        tag_spans = sorted((s for s in doc["spans"] if s["kind"] == "tag"),
+                           key=lambda s: s["offset"])
+        cases.append({
+            "enabled": True,
+            "case_id": doc["case_id"],
+            "way_id": None,
+            "description": None,
+            "driving_side": doc["driving_side"],
+            "iso_3166_2": doc["iso_3166_2"],
+            "tags": dict(s["text"].split("=", 1) for s in tag_spans),
+            "expected_highway": g["expected_highway"],
+            "expected_lanes": [_speeds_to_tuples(l)
+                               for l in json.loads(g["expected_json"])],
+            "expect_warnings": g["expect_warnings"],
+            "include_separators": g["include_separators"],
         })
     return cases
 

@@ -2,22 +2,31 @@
 
 The reference's public API is three pure functions
 (`tags_to_lanes`, `lanes_to_tags`, locale builder — SURVEY.md §2.10);
-here each becomes ONE ``mapInPandas`` stage over Arrow record batches:
-the batch arrives as pandas columns, a plain-Python loop runs the row
-kernel per way (allowed: the no-per-row-Python mandate bans per-row
-*Spark* UDFs, not loops inside an Arrow batch), and the result leaves as
-nested Arrow structs. No shuffle is introduced — the stage is a pure
-narrow map, so it pipelines with the scan and with downstream writes.
+here each becomes ONE Python stage over Arrow record batches.
+
+The forward transform is a ``mapInArrow`` stage with dictionary fan-out:
+each batch's rows get an exact key (tag entries or error, locale,
+config) built in pyarrow and dictionary-encoded; the row kernel runs only
+for distinct keys the task has not seen (allowed: the no-per-row-Python
+mandate bans per-row *Spark* UDFs, not loops inside an Arrow batch); the
+distinct rows are Arrow-encoded once and fanned out to every row with
+``take``. The reverse transform is a ``mapInPandas`` row loop. No shuffle
+is introduced — each stage is a pure narrow map, so it pipelines with the
+scan and with downstream writes.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.compare import road_eq_expected
 from ..core.lanes_to_tags import lanes_to_tags
@@ -28,6 +37,10 @@ from ..schemas import ROAD_SCHEMA, TAGS_SCHEMA
 from .span_assembly import with_tags
 
 _ACCESS_MODES = ("foot", "bicycle", "taxi", "bus", "motor")
+
+_ROAD_ARROW = to_arrow_schema(ROAD_SCHEMA)
+# one transformed row: every ROAD_SCHEMA column but doc_id
+_ROW_TYPE = pa.struct(list(_ROAD_ARROW)[1:])
 
 
 def _norm_lane(lane: dict) -> dict:
@@ -58,13 +71,14 @@ def _norm_lane(lane: dict) -> dict:
 
 
 class _TransformCache:
-    """Bounded memo of (tags, locale, config) → output row.
+    """Bounded memo of exact row key (tags, locale, config) → output row.
 
     OSM corpora are dominated by repeated tag-sets (a plain residential
     road tags identically millions of times), so the per-way transform is
-    dictionary-encodable: compute once per distinct input per worker,
-    share the (read-only, immediately Arrow-serialized) result dict.
-    FIFO-bounded so skew can't grow worker memory.
+    dictionary-encodable: the forward stage looks up each batch's distinct
+    keys here, runs the kernel once per miss for the whole task, and
+    Arrow-encodes the (read-only) result dicts once per batch before
+    fanning them out. FIFO-bounded so skew can't grow worker memory.
     """
 
     __slots__ = ("cache", "max_size")
@@ -112,13 +126,57 @@ def _transform_row(tags: Optional[dict], iso: Optional[str],
     return out
 
 
+def _framed(arr: pa.Array) -> pa.Array:
+    """Strings → self-delimiting ``<byte length>:<bytes>``; NULL → ``~``.
+
+    A frame starts with a digit, so NULL can't read as a frame and any
+    concatenation of framed values splits back into the same values: the
+    joined key is exact, no hash stands in for equality."""
+    lengths = pc.cast(pc.binary_length(arr), pa.string())
+    return pc.fill_null(pc.binary_join_element_wise(lengths, arr, ":"), "~")
+
+
+def _tag_codes(tags: pa.Array) -> pa.Array:
+    """map<string,string> → one framed string per row: the framed
+    key/value entries sorted by key (the kernel ignores tag order, so
+    permuted tag-sets share a key); NULL map → ``~``."""
+    entries_type = pa.list_(pa.struct([("key", tags.type.key_type),
+                                       ("value", tags.type.item_type)]))
+    as_list = tags.cast(entries_type)
+    entries = as_list.flatten()
+    lengths = pc.fill_null(pc.list_value_length(as_list), 0).to_numpy()
+    owner = np.repeat(np.arange(len(tags), dtype=np.int32), lengths)
+    order = pc.sort_indices(
+        pa.table({"row": owner, "key": entries.field("key")}),
+        sort_keys=[("row", "ascending"), ("key", "ascending")])
+    entries = entries.take(order)
+    entry_codes = pc.binary_join_element_wise(
+        _framed(entries.field("key")), _framed(entries.field("value")), "")
+    offsets = np.zeros(len(tags) + 1, np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    joined = pc.binary_join(pa.ListArray.from_arrays(offsets, entry_codes), "")
+    return _framed(pc.if_else(pc.is_valid(tags), joined,
+                              pa.scalar(None, pa.string())))
+
+
+def _row_keys(tags, tags_error, iso, side, inc) -> pa.DictionaryArray:
+    """Exact per-row transform key (tag entries or error, iso, side,
+    include_separators), dictionary-encoded: ``indices`` are the row
+    codes, ``dictionary`` the batch's distinct keys in first-seen order."""
+    key = pc.binary_join_element_wise(
+        _tag_codes(tags), _framed(tags_error), _framed(iso), _framed(side),
+        pc.if_else(inc, "1", "0"), "")
+    return pc.dictionary_encode(key)
+
+
 def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
                         locale_resolver=None) -> DataFrame:
     """documents(+locale columns) → ROAD_SCHEMA rows.
 
     Expects columns: ``doc_id``, ``spans`` and optionally ``iso_3166_2`` /
     ``driving_side`` (produced upstream by the spatial locale join or
-    carried on the fixture). Narrow map stage — no shuffle.
+    carried on the fixture) and a per-row ``include_separators`` (NULL
+    reads False). Narrow map stage — no shuffle.
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
     callable ``(cell:int64 ndarray, lon, lat ndarray) → (iso, side) object
@@ -126,6 +184,11 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
     ``cell`` is computed JVM-side and locale resolves inside THIS Arrow
     stage, so the whole pipeline is one Python stage per task (two stacked
     Python runners per core measurably degrade throughput).
+
+    Per Arrow batch the stage keys every row exactly (:func:`_row_keys`),
+    runs the row kernel once per distinct key that misses the task's
+    :class:`_TransformCache`, Arrow-encodes the distinct rows and fans
+    them out to all rows with ``take``.
     """
     cols = ["doc_id", "tags", "tags_error"]
     has_iso = "iso_3166_2" in df.columns and locale_resolver is None
@@ -146,40 +209,51 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
         cols += ["cell", "lon", "lat"]
     prepared = prepared.select(*cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         memo = _TransformCache()
-        for pdf in batches:
-            rows = []
+        for batch in batches:
+            n = batch.num_rows
             if locale_resolver is not None:
                 iso_np, side_np = locale_resolver(
-                    pdf["cell"].to_numpy(), pdf["lon"].to_numpy(np.float64),
-                    pdf["lat"].to_numpy(np.float64))
+                    batch.column("cell").to_numpy(zero_copy_only=False),
+                    batch.column("lon").to_numpy(zero_copy_only=False),
+                    batch.column("lat").to_numpy(zero_copy_only=False))
+                iso = pa.array(iso_np, pa.string())
+                side = pa.array(side_np, pa.string())
             else:
-                iso_np = pdf["iso_3166_2"].to_numpy() if has_iso else None
-                side_np = pdf["driving_side"].to_numpy() if has_side else None
-            inc_np = pdf["include_separators"].to_numpy() if has_inc else None
-            doc_ids = pdf["doc_id"].to_numpy()
-            tags_np = pdf["tags"].to_numpy()
-            err_np = pdf["tags_error"].to_numpy()
-            for i in range(len(pdf)):
-                tags = tags_np[i] if err_np[i] is None else None
-                inc = bool(inc_np[i]) if inc_np is not None else include_separators
-                iso = iso_np[i] if iso_np is not None else None
-                side = side_np[i] if side_np is not None else None
-                key = (err_np[i] if tags is None else tuple(sorted(tags.items())),
-                       iso, side, inc)
-                cached = memo.get(key)
-                if cached is None:
-                    cached = _transform_row(tags, iso, side, inc, err_np[i])
-                    memo.put(key, cached)
-                row = dict(cached)  # shallow: nested values shared read-only
-                row["doc_id"] = doc_ids[i]
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in ROAD_SCHEMA.fields])
+                no_locale = pa.nulls(n, pa.string())
+                iso = batch.column("iso_3166_2") if has_iso else no_locale
+                side = batch.column("driving_side") if has_side else no_locale
+            if has_inc:
+                inc = pc.fill_null(batch.column("include_separators"), False)
+            else:
+                inc = pa.array(np.full(n, include_separators))
+            tags = batch.column("tags")
+            err = batch.column("tags_error")
+            encoded = _row_keys(tags, err, iso, side, inc)
+            keys = encoded.dictionary.to_pylist()
+            rows = [memo.get(k) for k in keys]
+            missed = [c for c, row in enumerate(rows) if row is None]
+            if missed:
+                # codes number keys in first-seen order, so np.unique's
+                # first indices are one input row per distinct key
+                _, first = np.unique(encoded.indices.to_numpy(),
+                                     return_index=True)
+                at = pa.array(first[missed])
+                for c, t, e, i, s, b in zip(
+                        missed, tags.take(at).to_pylist(),
+                        err.take(at).to_pylist(), iso.take(at).to_pylist(),
+                        side.take(at).to_pylist(), inc.take(at).to_pylist()):
+                    row = _transform_row(None if e is not None or t is None
+                                         else dict(t), i, s, b, e)
+                    memo.put(keys[c], row)
+                    rows[c] = row
+            fanned = pa.array(rows, type=_ROW_TYPE).take(encoded.indices)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), *fanned.flatten()],
+                schema=_ROAD_ARROW)
 
-    return prepared.mapInPandas(run, schema=ROAD_SCHEMA)
+    return prepared.mapInArrow(run, schema=ROAD_SCHEMA)
 
 
 def _denorm_lane(lane: dict) -> dict:

@@ -63,10 +63,12 @@ def lanes_pipeline(docs: DataFrame,
     carry locale columns (iso_3166_2 / driving_side).
 
     ``fused`` (default): spatial locale resolution runs inside the lane
-    transform's Arrow stage (cell encode stays JVM) — ONE Python stage per
-    task; two stacked Python runners per core measurably degrade
-    throughput. ``fused=False`` keeps a separate locale stage (needed when
-    the caller wants the located DataFrame itself).
+    transform's ``mapInArrow`` stage (cell encode stays JVM), which
+    transforms each distinct tag-set once and fans rows out with Arrow
+    ``take`` — ONE Python stage per task; two stacked Python runners per
+    core measurably degrade throughput. ``fused=False`` keeps a separate
+    locale stage (needed when the caller wants the located DataFrame
+    itself).
     """
     if polygons is not None and fused:
         from .spatial.joins import make_locale_resolver

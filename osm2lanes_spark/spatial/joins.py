@@ -131,13 +131,27 @@ def polygon_cells_pdf(polygons: dict[str, np.ndarray], level: int) -> pd.DataFra
     polygons: key → (V,2) ring array. Returns pandas DF
     (cell:int64, key:str, full:bool); ``full`` cells skip PIP refinement.
     """
-    rows = []
+    return pd.DataFrame(list(_covering_rows(polygons, level)),
+                        columns=["cell", "key", "full"])
+
+
+def polygon_cell_index(polygons: dict[str, np.ndarray],
+                       level: int) -> dict[int, list[tuple[str, bool]]]:
+    """The rows of :func:`polygon_cells_pdf` as ``cell → [(key, full)]``,
+    for candidate lookup inside an Arrow stage; built straight from the
+    coverings, since going through the DataFrame took about a third of
+    the resolver build."""
+    index: dict[int, list[tuple[str, bool]]] = {}
+    for cell, key, full in _covering_rows(polygons, level):
+        index.setdefault(cell, []).append((key, full))
+    return index
+
+
+def _covering_rows(polygons: dict[str, np.ndarray], level: int):
     for key, ring in polygons.items():
-        covering = P.cover_polygon(ring, level)
-        full = P.classify_cells(ring, covering)
+        covering, full = P.cover_and_classify(ring, level)
         for cell, f in zip(covering.tolist(), full.tolist()):
-            rows.append((cell, key, f))
-    return pd.DataFrame(rows, columns=["cell", "key", "full"])
+            yield cell, key, f
 
 
 def polygon_cells_pdf_s2(polygons: dict[str, np.ndarray],
@@ -325,10 +339,7 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
 def _containment_map(points: DataFrame, polygons: dict[str, np.ndarray],
                      level: int, point_id: str) -> DataFrame:
     """Shuffle-free containment: cell→candidates dict + PIP in one kernel."""
-    dim_pdf = polygon_cells_pdf(polygons, level)
-    cell_index: dict[int, list[tuple[str, bool]]] = {}
-    for cell, key, full in dim_pdf.itertuples(index=False):
-        cell_index.setdefault(int(cell), []).append((key, bool(full)))
+    cell_index = polygon_cell_index(polygons, level)
     rings = {k: np.asarray(r, np.float64) for k, r in polygons.items()}
 
     @F.pandas_udf(T.StringType())
@@ -386,10 +397,7 @@ class LocaleResolver:
         from ..core.locale import COUNTRIES
 
         self.level = level
-        dim_pdf = polygon_cells_pdf(polygons, level)
-        self.cell_index: dict[int, list[tuple[str, bool]]] = {}
-        for cell, key, full in dim_pdf.itertuples(index=False):
-            self.cell_index.setdefault(int(cell), []).append((key, bool(full)))
+        self.cell_index = polygon_cell_index(polygons, level)
         self.rings = {k: np.asarray(r, np.float64) for k, r in polygons.items()}
         self.side = {a2: side for a2, (_, _, side) in COUNTRIES.items()}
 

@@ -75,16 +75,27 @@ def cover_polygon(ring: np.ndarray, level: int) -> np.ndarray:
     (boundary cells, exact segment-rect test). Conservative by construction:
     a cell that intersects the polygon always satisfies (a) or (b).
     """
+    return cover_and_classify(ring, level)[0]
+
+
+def cover_and_classify(ring: np.ndarray,
+                       level: int) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`cover_polygon`'s cells and :func:`classify_cells`' full
+    flags for them, in one pass: both tests need the same corner
+    point-in-polygon and edge-crossing results, so they are computed once
+    per bbox candidate."""
     lon_min, lat_min = ring.min(axis=0)
     lon_max, lat_max = ring.max(axis=0)
     candidates = cells.cover_bbox(lon_min, lat_min, lon_max, lat_max, level)
     clon0, clat0, clon1, clat1 = cells.cell_bounds(candidates)
-    keep = np.zeros(len(candidates), dtype=bool)
-    for qx, qy in ((clon0, clat0), (clon1, clat0), (clon0, clat1),
-                   (clon1, clat1), ((clon0 + clon1) / 2, (clat0 + clat1) / 2)):
-        keep |= point_in_polygon(qx, qy, ring)
-    keep |= edges_cross_cells(ring, clon0, clat0, clon1, clat1)
-    return candidates[keep]
+    corners = [point_in_polygon(qx, qy, ring)
+               for qx, qy in ((clon0, clat0), (clon1, clat0),
+                              (clon0, clat1), (clon1, clat1))]
+    centre = point_in_polygon((clon0 + clon1) / 2, (clat0 + clat1) / 2, ring)
+    crossed = edges_cross_cells(ring, clon0, clat0, clon1, clat1)
+    keep = np.logical_or.reduce(corners) | centre | crossed
+    full = np.logical_and.reduce(corners) & ~crossed
+    return candidates[keep], full[keep]
 
 
 def classify_cells(ring: np.ndarray, covering: np.ndarray) -> np.ndarray:

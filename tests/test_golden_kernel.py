@@ -54,3 +54,9 @@ def test_corpus_size():
     # 62 cases in the corpus, 46 enabled (rust: false disables the rest),
     # matching the reference loader's filter (test.rs:110-115).
     assert len(CASES) == 46
+
+
+def test_explicit_missing_path_raises(tmp_path):
+    # only the default tests.yml falls back to the committed fixture
+    with pytest.raises(FileNotFoundError):
+        load_cases(str(tmp_path / "tests.yml"))

@@ -1,7 +1,7 @@
 """End-to-end golden parity through the Spark pipeline.
 
 documents(parquet, interleaved spans) → span assembly (Catalyst HOFs) →
-tags_to_lanes mapInPandas stage → compare against expected lanes, plus the
+tags_to_lanes mapInArrow stage → compare against expected lanes, plus the
 span-sequence equality invariant across the stage.
 """
 

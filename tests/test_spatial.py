@@ -256,6 +256,29 @@ def test_classify_cells_concave_notch_not_full():
     assert not P.point_in_polygon(px, py, ring).any()
 
 
+def test_cover_and_classify_matches_separate_passes():
+    """The one-pass covering equals cover_polygon + classify_cells, and the
+    resolver's cell index holds exactly the covering dim's rows."""
+    from osm2lanes_spark.spatial.joins import (polygon_cell_index,
+                                               polygon_cells_pdf)
+
+    notch = np.array([
+        [0.0, 0.0], [40.0, 0.0], [40.0, 20.0],
+        [0.0, 20.0], [0.0, 10.02], [39.0, 10.02], [39.0, 10.0], [0.0, 10.0],
+    ])
+    rings = {"notch": notch, **G.all_country_polygons(["DE", "GB", "JP"])}
+    for level in (6, 8):
+        for ring in rings.values():
+            covering, full = P.cover_and_classify(ring, level)
+            assert np.array_equal(covering, P.cover_polygon(ring, level))
+            assert np.array_equal(full, P.classify_cells(ring, covering))
+        index = {}
+        for cell, key, full in polygon_cells_pdf(rings, level).itertuples(
+                index=False):
+            index.setdefault(int(cell), []).append((key, bool(full)))
+        assert polygon_cell_index(rings, level) == index
+
+
 def test_ring_cells_expr_matches_numpy_k_ring(spark):
     """The JVM exploded k-ring produces exactly cells.k_ring's set for
     every radius it serves (<=3), including world-edge points where the
